@@ -102,22 +102,24 @@ def tune_time_shift_w1(
             "long"
         )
     )
-    scores = scores.withColumn("_mse_fp", _mse_fp)
-    all_scores = scores
+    # n_grid is counted in the selection's own pass, before the knee
+    # filter drops rows: a join back to the unfiltered scores would
+    # solve the whole grid a second time
+    by_site = Window.partitionBy(site_col)
+    scores = scores.withColumn("_mse_fp", _mse_fp).withColumn(
+        "n_grid", F.count("*").over(by_site)
+    )
     if selection == "knee":
         # largest w1 within (1 + knee_tol) of the per-site minimum error
-        min_mse = Window.partitionBy(site_col)
         scores = scores.withColumn(
-            "_min", F.min("holdout_mse").over(min_mse)
+            "_min", F.min("holdout_mse").over(by_site)
         ).where(
             F.col("holdout_mse")
             <= F.col("_min") * F.lit(1.0 + float(knee_tol))
         )
-        pick = Window.partitionBy(site_col).orderBy(F.desc("w1"))
+        pick = by_site.orderBy(F.desc("w1"))
     else:
-        pick = Window.partitionBy(site_col).orderBy(
-            F.asc("_mse_fp"), F.asc("w1")
-        )
+        pick = by_site.orderBy(F.asc("_mse_fp"), F.asc("w1"))
     return (
         scores.withColumn("_rn", F.row_number().over(pick))
         .where(F.col("_rn") == 1)
@@ -125,9 +127,6 @@ def tune_time_shift_w1(
             site_col,
             F.col("w1").alias("best_w1"),
             F.col("holdout_mse"),
-        )
-        .join(
-            all_scores.groupBy(site_col).agg(F.count("*").alias("n_grid")),
-            on=site_col,
+            F.col("n_grid"),
         )
     )

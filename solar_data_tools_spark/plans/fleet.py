@@ -33,10 +33,14 @@ data_handler.py:391-394), ``scoring_error``, ``capacity_change_error``,
 ``run_pipeline_error`` summarizing the first failing stage.
 
 Execution shape at fleet scale: the relational stages (standardize,
-daily stats, report assembly) are plain DataFrame aggregations — two
-keyed shuffles fleet-wide; the solver stages run as one grouped-map
-task per site (``grouped_apply``), so 1000 executors process 1000
-sites concurrently and a single site's failure is isolated to its task.
+daily stats, report assembly) are plain DataFrame aggregations; the
+solver stages run as one grouped-map task per site (``grouped_apply``),
+so 1000 executors process 1000 sites concurrently and a single site's
+failure is isolated to its task. Every stage executes once per report:
+the tables with several consumers — ``standardized``, ``daily`` and
+``scores`` — are materialized (``materialize``), so one grid chain
+feeds both ``daily`` and the scorer, the scoring map runs once for its
+four report legs, and the w1 tuner solves its grid once.
 """
 
 from __future__ import annotations
@@ -53,6 +57,7 @@ from solar_data_tools_spark.algorithms.daily_flags import (
 )
 from solar_data_tools_spark.algorithms.scoring import daily_quality_scores
 from solar_data_tools_spark.plans.pipeline import run_pipeline
+from solar_data_tools_spark.session import materialize_df
 
 _NOERR = "No error"
 
@@ -93,16 +98,17 @@ def run_fleet_pipeline(
     shifts a site's grid by the detected whole-hour offset when
     ``|offset| > 1`` (reference :629-640).
 
-    ``materialize`` picks the fault-tolerance mode of the two shared
-    mid-pipeline tables (``session.materialize_df``): ``"local"``
+    ``materialize`` picks the fault-tolerance mode of the three shared
+    mid-pipeline tables — ``standardized``, ``daily`` and ``scores``
+    (``session.materialize_df``): ``"local"``
     (default — executor-local DISK_ONLY blocks, fastest, but an
     executor loss fails the job, so use on local[k] or dedicated
     non-preemptible clusters), ``"reliable"`` (checkpoint into
     ``spark.sparkContext.setCheckpointDir`` — one DFS write per table,
     survives executor loss; the right mode for long fleet jobs on
     preemptible/spot executors — r11 verdict item 3), or ``"none"``
-    (fully lazy; the grid chain re-executes per consumer — only for
-    plan audits).
+    (fully lazy; the grid chain and the scoring map re-execute per
+    consumer — only for plan audits).
 
     ``run_loss_analysis=True`` chains the loss-factor leg of the fleet
     runner (``run_loss_factor_analysis`` + ``loss_analysis.report()``,
@@ -150,6 +156,7 @@ def run_fleet_pipeline(
         min_val=min_val,
         slots_per_day=slots_per_day,
         per_site=per_site,
+        materialize=materialize,
     )
     if not per_site and slots_per_day is None:
         # the grid run_pipeline standardized onto IS the explicit
@@ -158,44 +165,22 @@ def run_fleet_pipeline(
         # every site's whole-days contract in the scorer
         slots_per_day = max(int(86400 // sampling_seconds), 1)
 
-    # the report fans the pipeline core out to many consumers (scoring,
-    # capacity changes, time shifts, tz check, std_out, loss analysis)
-    # — materialize the two shared tables once instead of re-deriving
-    # the explode+nearest-join grid chain per leg (values unchanged;
-    # measured 19.4 s -> 8.5 s for the 150-site sf0.01 report on a
-    # quiet host). The r11 review suggested moving the standardized
-    # checkpoint INSIDE run_pipeline (materialize=True) so daily's
-    # lineage reads it instead of embedding a second grid chain; an
-    # A/B on the only host available (load avg ~9, both variants
-    # re-measured with the same count() harness) was equivalent within
-    # contention noise (committed form 26.8/15.9 s cold/warm vs 47/34 s
-    # on an earlier noop harness that computes every solver column —
-    # the harness difference, not the checkpoint position, dominated).
-    # Keeping this form: it is the verified-green shape, daily's
-    # independent lineage stays Catalyst-fusable, and the duplicate
-    # materialization is one extra narrow-table pass. run_pipeline
-    # (materialize=True) remains available for single-grid consumers
-    # like the q169 spine.
-    import dataclasses
+    # the report fans daily out to the capacity, time-shift, tz and
+    # loss legs: checkpoint it once (standardized is checkpointed inside
+    # run_pipeline, so daily's lineage reads that checkpoint and the
+    # explode+nearest-join grid chain runs once per report)
+    core.daily = materialize_df(core.daily, materialize)
 
-    from solar_data_tools_spark.session import materialize_df
-
-    # local mode is DISK_ONLY: the grid at fleet scale must not compete
-    # with execution memory in small-heap sessions (the sf0.1 sweep's
-    # vanilla 1g driver OOMed with the default level — r11); reliable
-    # mode trades one DFS write per table for executor-loss survival
-    core = dataclasses.replace(
-        core,
-        standardized=materialize_df(core.standardized, materialize),
-        daily=materialize_df(core.daily, materialize),
-    )
-
-    # ---- scoring stage (per-site grouped map, error-isolated)
-    scores = daily_quality_scores(
-        core.standardized,
-        slots_per_day=None if per_site else slots_per_day,
-        site_col=site_col,
-        capture_errors=True,
+    # ---- scoring stage (per-site grouped map, error-isolated); four
+    # report legs read the scores, so the map runs once into a checkpoint
+    scores = materialize_df(
+        daily_quality_scores(
+            core.standardized,
+            slots_per_day=None if per_site else slots_per_day,
+            site_col=site_col,
+            capture_errors=True,
+        ),
+        materialize,
     )
 
     # ---- flag stages on the daily table (error-isolated)

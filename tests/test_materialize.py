@@ -129,17 +129,46 @@ def test_pipeline_values_invariant_across_modes(spark, tmp_path):
     assert snap(True) == base and snap(False) == base
 
 
+def _canonical_rows(df) -> list[tuple]:
+    def cell(v):
+        if isinstance(v, float):
+            return "nan" if v != v else round(v, 9)
+        return v
+
+    return sorted(
+        (tuple(cell(v) for v in r) for r in df.collect()), key=repr
+    )
+
+
 def test_fleet_report_reliable_mode(spark, tmp_path):
-    from solar_data_tools_spark.plans.fleet import fleet_report
+    """Every FleetResult table is the same in every materialize mode:
+    "none" is the fully lazy plan, so the checkpointed seams (the grid,
+    daily and the scores) change no answer. Per-site cadence, with the
+    shift fix and tz roll on, exercises every consumer of the seams."""
+    from solar_data_tools_spark.plans.fleet import run_fleet_pipeline
 
     _fresh_checkpoint_dir(spark, tmp_path)
     meas = _small_fleet(spark)
-    loc = fleet_report(meas, sampling_seconds=3600, materialize="local")
-    rel = fleet_report(meas, sampling_seconds=3600, materialize="reliable")
-    cols = ["site", "num_days", "capacity", "length_years"]
-    assert sorted(map(tuple, loc.select(cols).collect())) == sorted(
-        map(tuple, rel.select(cols).collect())
-    )
+
+    def snap(mode):
+        res = run_fleet_pipeline(
+            meas, fix_shifts=True, correct_tz=True, materialize=mode
+        )
+        return {
+            name: _canonical_rows(getattr(res, name))
+            for name in (
+                "report",
+                "scores",
+                "capacity_changes",
+                "time_shifts",
+                "standardized",
+            )
+        }
+
+    base = snap("none")
+    assert len(base["report"]) == 3 and base["scores"]
+    assert snap("local") == base
+    assert snap("reliable") == base
 
 
 def test_pagerank_trajectory_identical_across_modes(spark, tmp_path):

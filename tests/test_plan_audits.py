@@ -483,3 +483,63 @@ def test_ingest_dump_text_stages_plan(spark, sf_small, tmp_path):
                 ln for ln in chunk.splitlines() if "ReadSchema" in ln
             ][0]
             assert "crawl_meta" not in schema_line, schema_line
+
+
+def _map_in_pandas_lines(df, out_col: str | None = None) -> list[str]:
+    """The executed final plan's MapInPandas nodes, optionally only those
+    whose output columns include ``out_col`` (AQE repeats every node
+    under "Initial Plan")."""
+    plan = (
+        df._jdf.queryExecution().executedPlan().toString()
+    ).split("Initial Plan")[0]
+    return [
+        ln
+        for ln in plan.splitlines()
+        if "MapInPandas" in ln and (out_col is None or f"{out_col}#" in ln)
+    ]
+
+
+def test_fleet_report_runs_each_solver_stage_once(spark):
+    """The report reads the scores checkpoint (no scoring map in its own
+    plan, although four report legs consume the scores) and solves the
+    w1 tuner grid exactly once. Each grouped map is identified by its
+    output columns."""
+    from solar_data_tools_spark.plans.fleet import fleet_report
+    from tests.test_materialize import _small_fleet
+
+    report = fleet_report(
+        _small_fleet(spark), fix_shifts=True, correct_tz=True,
+        materialize="local",
+    )
+    assert len(report.collect()) == 3
+    assert _map_in_pandas_lines(report, "data_quality_score") == []
+    assert len(_map_in_pandas_lines(report, "holdout_mse")) == 1
+
+
+def test_w1_tuner_solves_its_grid_once(spark):
+    """n_grid is counted in the selection's own pass: a join back to the
+    unfiltered scores would re-run the grid's grouped map."""
+    import numpy as np
+    import pandas as pd
+
+    from solar_data_tools_spark.algorithms.grid_search import (
+        tune_time_shift_w1,
+    )
+
+    rng = np.random.default_rng(0)
+    days = pd.date_range("2020-01-01", periods=40).date
+    pdf = pd.DataFrame(
+        {
+            "site": np.repeat([1, 2], len(days)),
+            "date": np.tile(days, 2),
+            "solar_noon_com": 12.0 + 0.05 * rng.standard_normal(2 * len(days)),
+        }
+    )
+    daily = spark.createDataFrame(pdf)
+    grid = [0.1, 1.0, 10.0]
+    for selection in ("argmin", "knee"):
+        out = tune_time_shift_w1(daily, w1_grid=grid, selection=selection)
+        rows = out.collect()
+        assert sorted(r["site"] for r in rows) == [1, 2]
+        assert all(r["n_grid"] == len(grid) for r in rows)
+        assert len(_map_in_pandas_lines(out)) == 1, selection
